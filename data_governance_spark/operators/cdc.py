@@ -185,11 +185,16 @@ def cdc_chunks(
 ) -> DataFrame:
     """One row per chunk of each document's bytes:
     ``(id_col, chunk_idx int, offset long, size long, chunk_hash
-    long)`` with ``chunk_hash`` = from-spec XXH64 of the chunk bytes.
-    NULL content yields one row with NULL chunk fields (quarantine
-    semantics, the explode_archives precedent).  Map-only Arrow pass;
-    chunk-level dedup composes as ``groupBy("chunk_hash")`` downstream
-    — the shuffle moves 8-byte hashes and counters, never content."""
+    long)`` with ``chunk_hash`` = :func:`chunk_hash` of the chunk bytes
+    (first 8 bytes of MD5, signed little-endian int64).  NULL content
+    yields one row whose ``chunk_idx``, ``offset``, ``size`` and
+    ``chunk_hash`` are all NULL (quarantine semantics, the
+    explode_archives precedent).  Every value is exact whatever else
+    shares the Arrow batch: the chunk columns go from object straight
+    to nullable integer dtypes, so a NULL row never turns a batch's
+    hashes into float64.  Map-only Arrow pass; chunk-level dedup composes as
+    ``groupBy("chunk_hash")`` downstream — the shuffle moves 8-byte
+    hashes and counters, never content."""
     import pyspark.sql.types as T
 
     id_field = df.schema[id_col]
@@ -228,10 +233,17 @@ def cdc_chunks(
                          chunk_hash(data[start:end]))
                     )
                     start = end
+            # object, then nullable integers: left to infer, pandas
+            # makes float64 of any column holding a NULL and rounds
+            # every full-range int64 hash in the batch
             yield pd.DataFrame(
                 rows,
                 columns=[id_col, "chunk_idx", "offset", "size",
                          "chunk_hash"],
+                dtype=object,
+            ).astype(
+                {"chunk_idx": "Int32", "offset": "Int64", "size": "Int64",
+                 "chunk_hash": "Int64"}
             )
 
     return df.select(id_col, content_col).mapInPandas(run, schema)

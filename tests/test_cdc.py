@@ -196,7 +196,7 @@ class TestSparkSurface:
         assert by_doc["e"][0]["chunk_idx"] == 0
         assert by_doc["e"][0]["size"] == 0
         assert by_doc["e"][0]["chunk_hash"] == chunk_hash(b"")
-        # reconstruction + hash parity against the from-spec xxh64
+        # reconstruction + hash parity against chunk_hash (MD5 prefix)
         a = bytes(blobs[0][1])
         achunks = sorted(by_doc["a"], key=lambda r: r["chunk_idx"])
         assert achunks[0]["offset"] == 0
@@ -217,6 +217,26 @@ class TestSparkSurface:
             .count()
         )
         assert agg == len(achunks)  # every 'a' chunk found its twin
+
+    def test_null_row_in_shared_batch_keeps_hashes_exact(self, spark):
+        # a NULL quarantine row in the SAME Arrow batch as real content
+        # must not turn the batch's int64 hashes into float64 (which
+        # rounds every full-range hash); coalesce(1) forces one batch
+        random.seed(23)
+        a = random.randbytes(50_000)
+        df = spark.createDataFrame(
+            [("a", bytearray(a)), ("b", None)],
+            "doc_id string, content binary",
+        ).coalesce(1)
+        rows = cdc_chunks(df, id_col="doc_id").collect()
+        null_rows = [r for r in rows if r["doc_id"] == "b"]
+        assert len(null_rows) == 1
+        assert null_rows[0]["chunk_hash"] is None
+        achunks = [r for r in rows if r["doc_id"] == "a"]
+        assert len(achunks) > 1
+        for r in achunks:
+            piece = a[r["offset"] : r["offset"] + r["size"]]
+            assert r["chunk_hash"] == chunk_hash(piece), r
 
 
 class TestGateFixturePin:
