@@ -11,26 +11,32 @@ The reference computes every metric as a MongoDB pipeline of the shape
 …cloned across ~10 files x 2 packages, then re-run once per WHO region
 (dag_02_languages.py:93-142) and once per country
 (tmgl_countries/dag_02_indicators.py:53-93) — an N+1 server-side query
-loop. Here the whole family is one spec-driven job: the slice (region
-or country) is a column attached once via a broadcast join against the
-who_region dimension (J10), and per-slice + global rows come from ONE
-scan via grouping sets — global rows carry slice=NULL exactly like the
-reference's region=None metric documents.
+loop. Here every family over every slice is ONE scan and ONE hash
+aggregate (run_metrics_single_scan): a single projection computes the
+year and one cleaned entity array per family, the families are
+exploded, each row is fanned out to its slices — the global slice
+(every slice column NULL, like the reference's region=None metric
+documents) plus one per region/country value that attach_slices
+looked up in an inlined literal map of the dimension (J10) — and one
+groupBy(type, <slices>, name, year).count() produces the long table.
 
-Scale: single scan of the fact table per metric batch, broadcast dims,
-partial-agg-friendly hash aggregates, no per-slice jobs, ever.
+run_metric / run_metrics / run_metric_sliced stay as the per-family
+forms (one aggregate per family and slicing); their results are the
+reference the single scan is tested against.
 """
 
 from __future__ import annotations
 
+from collections.abc import Sequence
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-# attach_slice inlines the (country -> regions) dim as a literal map when
-# it has at most this many countries; beyond that it joins (see fallback).
+# attach_slices inlines the (country -> slice values) dim as literal
+# maps when it has at most this many countries; beyond that it joins
+# (see fallback).
 _INLINE_DIM_MAX = 500
 
 
@@ -53,7 +59,11 @@ class MetricSpec:
     entity_expr   -> optional fn(Column) -> Column applied post-explode
                      (lowercasing A1, regex capture A5/A6/A10, …);
                      returning NULL drops the row (regex miss)
-    prefilter     -> optional fn(DataFrame) -> DataFrame (A2 article-only)
+    prefilter     -> optional zero-arg fn -> boolean Column over the
+                     fact row (A2 article-only); rows where it is not
+                     true are left out of this family. A fn rather
+                     than a Column because specs are module constants
+                     and a Column needs a live session.
     recode        -> optional {value: label} map (A3/A4 $switch tables);
                      unmatched values PASS THROUGH unchanged, matching
                      the reference's "default": "$type" branches
@@ -69,67 +79,62 @@ class MetricSpec:
     min_year: int = 1500
 
 
-def attach_slice(
+def attach_slices(
     facts: DataFrame,
     countries_col: str,
     dim: DataFrame,
+    slicings: dict[str, str],
     dim_country_col: str = "country_key",
-    dim_slice_col: str = "who_region",
-    slice_col: str = "region",
 ) -> DataFrame:
-    """Attach the slice dimension (J10 region->countries) as a column.
+    """Attach one array<string> column per slicing: ``slicings`` maps
+    the new column's name to the dim column holding its slice values
+    (J10: region or country per country key). Each array holds the
+    distinct slice values of the row's countries (matched on
+    lower(trim()) keys), empty when none match.
 
-    A fact row belongs to a region if ANY of its countries is in the
-    region — and is counted ONCE per region even when several of its
-    countries belong to it (the reference's per-region $match is a
-    filter, not a fan-out).
-
-    The dim is a true dimension (a few hundred (country, region) rows —
-    the reference loads it into task memory as a dict, tmgl_regions/
-    misc.py:4-24), so it is collected once and embedded as a literal
-    country->regions map: the fan-out becomes a row-local array lookup
-    + explode with ZERO shuffles and no synthetic row key. (An earlier
-    version joined back on monotonically_increasing_id, which is
-    nondeterministic under recompute — AQE/task retries could re-id
-    rows and mis-assign slices.) Dims too large to inline fall back to
-    an explode/join/collect_set plan over a localCheckpoint snapshot
-    whose row ids are frozen by lineage truncation.
+    The dim is a true dimension (a few hundred rows — the reference
+    loads it into task memory as a dict, tmgl_regions/misc.py:4-24),
+    so it is collected ONCE for all slicings and embedded as literal
+    country -> values maps: the lookup is row-local, with ZERO shuffles
+    and no synthetic row key. (An earlier version joined back on
+    monotonically_increasing_id, which is nondeterministic under
+    recompute — AQE/task retries could re-id rows and mis-assign
+    slices.) Dims too large to inline fall back to an
+    explode/join/collect_set plan over a localCheckpoint snapshot whose
+    row ids are frozen by lineage truncation.
     """
     empty = F.array().cast("array<string>")
-    dim_pairs = (
-        dim.select(
-            F.lower(F.trim(F.col(dim_country_col))).alias("ck"),
-            F.col(dim_slice_col).cast("string").alias("s"),
-        )
-        .distinct()
-        .groupBy("ck")
-        .agg(F.sort_array(F.collect_set("s")).alias("ss"))
+    ck = F.lower(F.trim(F.col(dim_country_col)))
+    values = {
+        out: F.col(src).cast("string") for out, src in slicings.items()
+    }
+    dim_values = dim.groupBy(ck.alias("ck")).agg(
+        *[F.sort_array(F.collect_set(v)).alias(out) for out, v in values.items()]
     )
     # one scan: take(N+1) and branch on length (ADVICE r2). 500-entry cap
-    # keeps the inlined literal map small enough that Catalyst analysis
+    # keeps the inlined literal maps small enough that Catalyst analysis
     # stays cheap — a bigger dim goes through the join fallback below.
-    taken = dim_pairs.take(_INLINE_DIM_MAX + 1)
-    rows = taken if len(taken) <= _INLINE_DIM_MAX else None
-    if rows is not None:
-        if rows:
-            lookup = F.create_map(
-                *[x for r in rows for x in (F.lit(r["ck"]), F.lit(r["ss"]))]
-            )
-        else:
-            lookup = F.lit(None).cast("map<string,array<string>>")
-        regions = F.array_distinct(
-            F.flatten(
-                F.transform(
-                    F.coalesce(F.col(countries_col), empty),
-                    lambda c: F.coalesce(
-                        F.element_at(lookup, F.lower(F.trim(c))), empty
-                    ),
+    taken = dim_values.take(_INLINE_DIM_MAX + 1)
+    if len(taken) <= _INLINE_DIM_MAX:
+        countries = F.coalesce(F.col(countries_col), empty)
+
+        def lookup(out: str) -> Column:
+            # countries with no value for this slicing map to nothing,
+            # which the coalesce below already gives them
+            pairs = [(r["ck"], r[out]) for r in taken if r["ck"] is not None and r[out]]
+            if not pairs:
+                return empty
+            m = F.create_map(*[F.lit(x) for kv in pairs for x in kv])
+            return F.array_distinct(
+                F.flatten(
+                    F.transform(
+                        countries,
+                        lambda c: F.coalesce(F.element_at(m, F.lower(F.trim(c))), empty),
+                    )
                 )
             )
-        )
-        # explode_outer(0-region row) -> one slice=NULL row, preserving
-        # the fact exactly like the join path did
-        return facts.withColumn(slice_col, F.explode_outer(regions))
+
+        return facts.withColumns({out: lookup(out) for out in slicings})
 
     # fallback: dim too big to inline. monotonically_increasing_id is
     # nondeterministic under recompute, so freeze it with an eager
@@ -147,25 +152,74 @@ def attach_slice(
     exploded = marked.select(
         "_rid", F.explode_outer(F.col(countries_col)).alias("_country")
     )
-    dim_small = dim.select(
-        F.lower(F.trim(F.col(dim_country_col))).alias("_ck"),
-        # cast to string like the inline path, so both emit one schema
-        F.col(dim_slice_col).cast("string").alias(slice_col),
-    ).distinct()
-    regions = (
+    dim_small = dim.select(ck.alias("_ck"), *[v.alias(out) for out, v in values.items()]).distinct()
+    found = (
         exploded.join(
             F.broadcast(dim_small),
             F.lower(F.trim(F.col("_country"))) == F.col("_ck"),
             "left",
         )
         .groupBy("_rid")
-        .agg(F.collect_set(slice_col).alias("_regions"))
+        .agg(*[F.collect_set(out).alias(out) for out in slicings])
     )
-    return (
-        marked.join(regions, "_rid")
-        .withColumn(slice_col, F.explode_outer("_regions"))
-        .drop("_rid", "_regions")
+    return marked.join(found, "_rid").drop("_rid")
+
+
+def attach_slice(
+    facts: DataFrame,
+    countries_col: str,
+    dim: DataFrame,
+    dim_country_col: str = "country_key",
+    dim_slice_col: str = "who_region",
+    slice_col: str = "region",
+) -> DataFrame:
+    """Fan facts out to one row per slice (J10 region->countries).
+
+    A fact row belongs to a region if ANY of its countries is in the
+    region — and is counted ONCE per region even when several of its
+    countries belong to it (the reference's per-region $match is a
+    filter, not a fan-out). A row in no slice is kept once with
+    slice=NULL (explode_outer)."""
+    fanned = attach_slices(
+        facts, countries_col, dim, {"_slices": dim_slice_col}, dim_country_col
     )
+    return fanned.withColumn(slice_col, F.explode_outer("_slices")).drop("_slices")
+
+
+def explode_slices(df: DataFrame, slice_cols: Sequence[str]) -> DataFrame:
+    """One row per (row, slice) over array<string> slice columns (see
+    attach_slices): first the global slice, with every slice column
+    NULL, then one row per value of each slice column, holding that
+    value there and NULL in the others. The arrays become scalar
+    string columns of the same names."""
+    none = F.lit(None).cast("string")
+    empty = F.array().cast("array<string>")
+
+    def one(col: str):
+        return lambda v: F.struct(*[(v if c == col else none).alias(c) for c in slice_cols])
+
+    slices = F.concat(
+        F.array(F.struct(*[none.alias(c) for c in slice_cols])),
+        *[F.transform(F.coalesce(F.col(c), empty), one(c)) for c in slice_cols],
+    )
+    rest = [c for c in df.columns if c not in slice_cols]
+    return df.select(*rest, F.inline(slices))
+
+
+def _cleaner(spec: MetricSpec):
+    """entity_expr then recode, as a fn of one entity value (NULL drops
+    it). Single-arg: F.transform dispatches on lambda arity, so a second
+    (defaulted) parameter would be fed the element INDEX."""
+
+    def clean(ent: Column) -> Column:
+        if spec.entity_expr is not None:
+            ent = spec.entity_expr(ent)
+        if spec.recode is not None:
+            decode = F.create_map(*[F.lit(x) for kv in spec.recode.items() for x in kv])
+            ent = F.coalesce(F.element_at(decode, ent), ent)
+        return ent
+
+    return clean
 
 
 def run_metric(
@@ -187,7 +241,7 @@ def run_metric(
     """
     df = facts
     if spec.prefilter is not None:
-        df = spec.prefilter(df)
+        df = df.filter(spec.prefilter())
     df = df.withColumn("year", year_from_freetext(date_col)).filter(
         F.col("year") >= spec.min_year
     )
@@ -199,12 +253,7 @@ def run_metric(
         df = df.withColumn("_entity", F.explode(spec.entity_col))
     else:
         df = df.withColumn("_entity", F.col(spec.entity_col))
-    ent = F.col("_entity")
-    if spec.entity_expr is not None:
-        ent = spec.entity_expr(ent)
-    if spec.recode is not None:
-        decode = F.create_map(*[F.lit(x) for kv in spec.recode.items() for x in kv])
-        ent = F.coalesce(F.element_at(decode, ent), ent)
+    ent = _cleaner(spec)(F.col("_entity"))
     df = df.withColumn("name", ent).filter(F.col("name").isNotNull())
 
     out_slice = slice_col or "region"
@@ -249,8 +298,10 @@ def run_metric_sliced(
 
 
 def run_metrics(facts: DataFrame, specs: list[MetricSpec], **kwargs) -> DataFrame:
-    """All metric families into one long metrics table (the reference
-    writes each family separately into tmgl_charts.02_metrics)."""
+    """All metric families into one long metrics table, one aggregate
+    per family (the reference writes each family separately into
+    tmgl_charts.02_metrics). run_metrics_single_scan is the one-scan
+    form."""
     out = None
     for spec in specs:
         part = run_metric(facts, spec, **kwargs)
@@ -259,43 +310,40 @@ def run_metrics(facts: DataFrame, specs: list[MetricSpec], **kwargs) -> DataFram
 
 
 def run_metrics_single_scan(
-    facts: DataFrame, specs: list[MetricSpec], date_col: str = "dp"
+    facts: DataFrame,
+    specs: list[MetricSpec],
+    date_col: str = "dp",
+    slice_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """All metric families in ONE scan of the fact table — SURVEY §3.2's
-    'one multi-metric job via unpivot' upgrade over run_metrics (which
-    scans once per family).
+    """All metric families over all slices in ONE scan of the fact
+    table and ONE hash aggregate — SURVEY §3.2's 'one multi-metric job
+    via unpivot' upgrade over run_metrics (one aggregate per family).
 
-    One projection computes a cleaned entity ARRAY per family (scalar
-    entities wrapped, entity_expr/recode applied inside a transform,
-    nulls dropped), then stack() unpivots (family, entities), explode
-    flattens, and a single hash aggregate counts (type, name, year).
-    At 100 TB this is the difference between F scans of the corpus and
-    1: the unpivot multiplies only the tiny cleaned entity arrays, not
-    the scan.
+    One projection computes the year and a cleaned entity ARRAY per
+    family (scalar entities wrapped, entity_expr/recode applied inside
+    a transform, nulls dropped, emptied where the family's prefilter or
+    min_year rejects the row); an array of (type, entities) structs is
+    exploded, then the entities; explode_slices fans each row out to
+    the global slice plus its ``slice_cols`` values; and a single
+    groupBy(type, <slices>, name, year).count() ends it. At 100 TB this
+    is the difference between F x S scans of the corpus and 1: the
+    fan-out multiplies only the tiny cleaned entity arrays, not the
+    scan.
 
-    DataFrame-level prefilters can't fold into a shared projection —
-    express them as entity_expr NULLs (rows drop) or use run_metrics.
-    Entities are normalized to STRINGS (stack() needs one type across
+    ``slice_cols`` name array<string> columns of ``facts`` (see
+    attach_slices); the output is (type, *slice_cols, name, year,
+    count), global rows NULL in every slice column. Without slices it
+    is (type, region, name, year, count) with region NULL, run_metrics'
+    shape. Entities are normalized to STRINGS (one array type across
     families): non-string entity columns must supply an entity_expr
     casting to string, else this raises rather than silently diverging
     from run_metrics' native-typed names.
     """
-    import re as _re
-
-    if any(s.prefilter is not None for s in specs):
-        raise ValueError("prefilter specs need run_metrics (per-family scan)")
-    for s in specs:
-        # names are interpolated into the generated stack() SQL
-        if not _re.fullmatch(r"[A-Za-z0-9_\- ]+", s.name):
-            raise ValueError(f"metric name {s.name!r} unsafe for stack() SQL")
-    min_years = {s.min_year for s in specs}
-    if len(min_years) != 1:
-        raise ValueError("single-scan requires one shared min_year")
-    (min_year,) = min_years
-
+    min_year = min(s.min_year for s in specs)
     dtypes = dict(facts.dtypes)
-    arrays = []
-    for i, spec in enumerate(specs):
+    year = F.col("year")
+    families = []
+    for spec in specs:
         if spec.entity_col not in dtypes:
             raise KeyError(f"{spec.entity_col} not in {facts.columns}")
         elem_type = dtypes[spec.entity_col]
@@ -312,44 +360,34 @@ def run_metrics_single_scan(
             if dtypes[spec.entity_col].startswith("array")
             else F.array(spec.entity_col)
         )
+        entities = F.filter(
+            F.transform(base, _cleaner(spec)), lambda x: x.isNotNull()
+        ).cast("array<string>")  # one element type (and nullability) for all
+        keep = spec.prefilter() if spec.prefilter is not None else None
+        if spec.min_year > min_year:
+            late = year >= spec.min_year
+            keep = late if keep is None else keep & late
+        if keep is not None:
+            # a rejected row gets no entities: when(NULL/false) -> NULL
+            # explodes to nothing, as .filter(prefilter) drops it
+            entities = F.when(keep, entities)
+        families.append(F.struct(F.lit(spec.name).alias("type"), entities.alias("_entities")))
 
-        # single-arg closure: F.transform dispatches on lambda arity, so
-        # a second (defaulted) parameter would be fed the element INDEX
-        def make_clean(spec: MetricSpec):
-            def clean(ent: Column) -> Column:
-                if spec.entity_expr is not None:
-                    ent = spec.entity_expr(ent)
-                if spec.recode is not None:
-                    decode = F.create_map(
-                        *[F.lit(x) for kv in spec.recode.items() for x in kv]
-                    )
-                    ent = F.coalesce(F.element_at(decode, ent), ent)
-                return ent
-
-            return clean
-
-        arrays.append(
-            F.filter(F.transform(base, make_clean(spec)), lambda x: x.isNotNull())
-            # normalize element nullability: stack() requires all family
-            # columns to have the exact same type incl. containsNull
-            .cast("array<string>")
-            .alias(f"_m_{i}")
-        )
-
-    wide = facts.select(
-        year_from_freetext(date_col).alias("year"), *arrays
-    ).filter(F.col("year") >= min_year)
-    stack_args = ", ".join(f"'{s.name}', _m_{i}" for i, s in enumerate(specs))
-    long = wide.select(
-        "year",
-        F.expr(f"stack({len(specs)}, {stack_args}) AS (type, _entities)"),
+    wide = facts.withColumn("year", year_from_freetext(date_col)).filter(year >= min_year)
+    long = (
+        wide.select("year", *slice_cols, F.inline(F.array(*families)))
+        .select("type", "year", *slice_cols, F.explode("_entities").alias("name"))
     )
+    if slice_cols:
+        out_slices = list(slice_cols)
+        long = explode_slices(long, out_slices)
+    else:
+        out_slices = ["region"]
+        long = long.withColumn("region", F.lit(None).cast("string"))
     return (
-        long.select("type", "year", F.explode("_entities").alias("name"))
-        .groupBy("type", "name", "year")
+        long.groupBy("type", *out_slices, "name", "year")
         .agg(F.count(F.lit(1)).alias("count"))
-        .withColumn("region", F.lit(None).cast("string"))
-        .select("type", "region", "name", "year", "count")
+        .select("type", *out_slices, "name", "year", "count")
     )
 
 
@@ -358,13 +396,19 @@ def label_join(
     labels: DataFrame,
     code_col: str = "code_xml",
     label_col: str = "label_en",
+    type_col: str | None = None,
 ) -> DataFrame:
     """Post-aggregation label decode (J11 tmgl_areas / J12 DECS MFN):
-    broadcast join on the aggregated name, label preferred when found."""
+    broadcast join on the aggregated name, label preferred when found.
+    With ``type_col`` the labels carry the metric type they decode and
+    the join also matches it, so one join decodes several families."""
+    cond = metrics["name"] == labels[code_col]
+    if type_col is not None:
+        cond = cond & (metrics["type"] == labels[type_col])
     return (
-        metrics.join(F.broadcast(labels), metrics["name"] == labels[code_col], "left")
+        metrics.join(F.broadcast(labels), cond, "left")
         .withColumn("name", F.coalesce(F.col(label_col), F.col("name")))
-        .drop(code_col, label_col)
+        .drop(code_col, label_col, *([type_col] if type_col else []))
     )
 
 

@@ -9,10 +9,16 @@ bug-for-bug except where SURVEY §7.4 documents a deliberate divergence.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from data_governance_spark.metrics.runner import MetricSpec, year_from_freetext
+from data_governance_spark.metrics.runner import (
+    MetricSpec,
+    explode_slices,
+    year_from_freetext,
+)
 
 # A3 recode, dags/tmgl_regions/dag_02_doc_type.py:14-28 ($switch;
 # default passes the raw value through)
@@ -75,7 +81,7 @@ TMGL_SPECS: list[MetricSpec] = [
     MetricSpec(
         name="journal",
         entity_col="ta",
-        prefilter=lambda df: df.filter(F.array_contains(F.col("type"), "article")),
+        prefilter=lambda: F.array_contains(F.col("type"), "article"),
     ),
     # A3: doctype x year with 9-branch recode (dag_02_doc_type.py:11-66)
     MetricSpec(name="doctype", entity_col="type", recode=DOCTYPE_RECODE),
@@ -137,16 +143,26 @@ def decs_label_dim(decs: DataFrame) -> DataFrame:
     )
 
 
-def timeline_metric(facts: DataFrame, date_col: str = "dp") -> DataFrame:
+def timeline_metric(
+    facts: DataFrame, date_col: str = "dp", slice_cols: Sequence[str] = ()
+) -> DataFrame:
     """A11 (dag_02_timeline.py:11-50): year -> (total, with_fulltext).
+
+    With ``slice_cols`` (array<string> columns, see
+    runner.attach_slices) the same single aggregate also gives A12's
+    per-slice rows: (*slice_cols, year, total, with_fulltext), global
+    rows NULL in every slice column.
 
     Note the string compare fulltext == '1' — the TMGL landing zone is
     XML-sourced so everything is a string (SURVEY §7.4 item 5).
     """
+    df = facts.withColumn("year", year_from_freetext(date_col)).filter(
+        F.col("year") >= 1500
+    )
+    if slice_cols:
+        df = explode_slices(df.select("year", "fulltext", *slice_cols), slice_cols)
     return (
-        facts.withColumn("year", year_from_freetext(date_col))
-        .filter(F.col("year") >= 1500)
-        .groupBy("year")
+        df.groupBy(*slice_cols, "year")
         .agg(
             F.count(F.lit(1)).alias("total"),
             F.sum(F.when(F.col("fulltext") == "1", 1).otherwise(0)).alias(

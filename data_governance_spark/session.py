@@ -31,6 +31,13 @@ from pyspark.sql import SparkSession  # noqa: E402
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+def df_debug_conf(value: str | None) -> str:
+    """``SPARK_GRAFT_DF_DEBUG`` -> the DataFrame-debugging conf value:
+    "true" for 1/true/yes (any case, surrounding blanks ignored), else
+    "false"."""
+    return "true" if (value or "").strip().lower() in ("1", "true", "yes") else "false"
+
+
 def get_spark(
     app_name: str = "data_governance_spark",
     shuffle_partitions: int | None = None,
@@ -69,11 +76,11 @@ def get_spark(
         # in pyspark/errors/utils.py), and builder.config is ignored when
         # getOrCreate returns an existing session — flipping it later (e.g.
         # via extra_conf on a second get_spark call) silently does nothing.
-        # Set env SPARK_GRAFT_DF_DEBUG=true for that (read here, early),
-        # don't edit this literal mid-process. (ADVICE r14)
+        # Set env SPARK_GRAFT_DF_DEBUG=1 (or true/yes) for that (read
+        # here, early), don't edit this literal mid-process. (ADVICE r14)
         .config(
             "spark.python.sql.dataFrameDebugging.enabled",
-            os.environ.get("SPARK_GRAFT_DF_DEBUG", "false"),
+            df_debug_conf(os.environ.get("SPARK_GRAFT_DF_DEBUG")),
         )
         # Cluster twin of the process-env pin above: executors must
         # hand their Python workers single-threaded BLAS too (local

@@ -6,7 +6,9 @@ The reference renders one Highcharts dashboard (index.html) from a
 template plus one embedded JSON payload per chart, and one HTML file
 per country keyed by ISO code (J13 lookup). Chart payloads are tiny
 (the served layer), so templating is a driver-side step over collected
-aggregates — the engine's job ends at the pivoted metric DataFrames.
+aggregates: write_country_reports makes three queries whatever the
+number of countries and charts (the countries, the ISO map, and one
+collect of every report slice, pivoted by json_sink.pivot_rows).
 
 The A19 browser-side aggregation (year-range sum -> top-k) is promoted
 into the engine (metrics.runner.top_k); the template embeds
@@ -22,7 +24,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_governance_spark.sinks.json_sink import chart_json
+from data_governance_spark.sinks.json_sink import chart_json, pivot_rows
 
 PAGE_TEMPLATE = """<!DOCTYPE html>
 <html>
@@ -60,6 +62,13 @@ def build_report(
         t: chart_json(metrics, t, slice_col=slice_col, slice_value=slice_value)
         for t in metric_types
     }
+    return render_report(charts, metric_types, title, generated)
+
+
+def render_report(
+    charts: dict[str, Any], metric_types: list[str], title: str, generated: str
+) -> str:
+    """The page for already pivoted charts ({metric type: chart body})."""
     sections = "\n".join(
         SECTION_TEMPLATE.format(key=t, label=t.title()) for t in metric_types
     )
@@ -89,17 +98,23 @@ def report_filename_col(iso: F.Column, country: F.Column) -> F.Column:
     return F.lower(F.coalesce(iso, F.regexp_replace(country, " ", "_")))
 
 
+def iso_codes(who_region_dim: DataFrame) -> dict[str, str | None]:
+    """J13 for every country in one query: lowercased country name
+    (pais_tmgl, else pais_en) -> its first 2-char synonym, from the
+    first dim row of that name (dag_02_map.py:30)."""
+    out: dict[str, str | None] = {}
+    for key, iso in who_region_dim.select(
+        F.lower(F.coalesce(F.col("pais_tmgl"), F.col("pais_en"))),
+        iso_col(F.col("pais_sinonimo")),
+    ).collect():
+        if key is not None:
+            out.setdefault(key, iso)
+    return out
+
+
 def iso_code(who_region_dim: DataFrame, country: str) -> str | None:
     """J13: the country's first 2-char synonym (dag_02_map.py:30)."""
-    row = (
-        who_region_dim.filter(
-            F.lower(F.coalesce(F.col("pais_tmgl"), F.col("pais_en")))
-            == country.lower()
-        )
-        .select(iso_col(F.col("pais_sinonimo")).alias("iso"))
-        .collect()
-    )
-    return row[0]["iso"] if row else None
+    return iso_codes(who_region_dim).get(country.lower())
 
 
 def write_country_reports(
@@ -112,23 +127,32 @@ def write_country_reports(
     """One <iso>.html per country present in the metrics (J14 semi-join
     drives eligibility: distinct country values)."""
     os.makedirs(out_dir, exist_ok=True)
-    countries = [
+    countries = sorted(
         r["country"]
         for r in metrics.select("country").distinct().collect()
         if r["country"]
-    ]
+    )
+    if not countries:
+        return []
+    isos = iso_codes(who_region_dim)
+    slices: dict[tuple[str, str], list] = {}
+    if metric_types:
+        for r in (
+            metrics.filter(
+                F.col("country").isNotNull() & F.col("type").isin(*metric_types)
+            )
+            .select("country", "type", "year", "name", "count")
+            .collect()
+        ):
+            slices.setdefault((r[0], r[1]), []).append(r[2:])
     written = []
-    for country in sorted(countries):
+    for country in countries:
         # the reference lowercases the ISO for the filename
         # (tmgl_countries/dag_03_export_html.py:275-276)
-        iso = (iso_code(who_region_dim, country) or country.replace(" ", "_")).lower()
-        html = build_report(
-            metrics,
-            metric_types,
-            title=f"TMGL — {country}",
-            generated=generated,
-            slice_col="country",
-            slice_value=country,
+        iso = (isos.get(country.lower()) or country.replace(" ", "_")).lower()
+        charts = {t: pivot_rows(slices.get((country, t), ())) for t in metric_types}
+        html = render_report(
+            charts, metric_types, title=f"TMGL — {country}", generated=generated
         )
         path = os.path.join(out_dir, f"{iso}.html")
         with open(path, "w", encoding="utf-8") as f:

@@ -69,7 +69,15 @@ def harvest_pages(
 
     Returns (offset, records: array<json-string>, error). Errors stay
     as rows (filter error.isNotNull() to re-drive the failed pages —
-    the reference's error-queue-and-replay)."""
+    the reference's error-queue-and-replay).
+
+    The harvest is ONE snapshot: the pages are fetched once, here, and
+    kept as an eager localCheckpoint, so every consumer (records_df's
+    branches, a join of two of them, a retried stage) reads the same
+    rows and the API sees each page requested once per call. A lazy
+    frame would replay the fetch once per consumer, each replay
+    possibly seeing other data. Checkpoint blocks are not replicated:
+    losing an executor fails the job instead of fetching again."""
     params = params or {}
     offsets = list(range(0, total_count, limit))
     if not offsets:
@@ -86,7 +94,7 @@ def harvest_pages(
             except Exception as e:  # page-level error capture, job survives
                 yield (row.offset, None, f"{type(e).__name__}: {e}")
 
-    return pages.rdd.mapPartitions(run).toDF(PAGE_SCHEMA)
+    return pages.rdd.mapPartitions(run).toDF(PAGE_SCHEMA).localCheckpoint()
 
 
 def records_df(pages: DataFrame, schema: T.StructType) -> DataFrame:

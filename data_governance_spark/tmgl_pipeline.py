@@ -5,24 +5,30 @@ as one driver program.
 
 Where the reference runs 11 metric DAGs x (1 global + N regions)
 server-side queries plus an Airflow task per country, this computes
-every family over ONE pass of the landing table per grouping
-(global + region-fanned + country-fanned)."""
+every family over every slice (global, each WHO region, each country)
+in ONE scan of the landing table and ONE aggregate
+(runner.run_metrics_single_scan), then decodes labels with ONE
+broadcast join; the timeline is one more scan and aggregate. The WHO
+dimension is collected once per call (runner.attach_slices)."""
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_governance_spark.metrics.runner import (
-    attach_slice,
-    run_metric,
-    run_metrics,
+    attach_slices,
+    label_join,
+    run_metrics_single_scan,
 )
-from data_governance_spark.metrics.runner import label_join
+# the per-family forms stay importable from here: perfbench/workloads.py
+# patches these names when it traces a pass
+from data_governance_spark.metrics.runner import attach_slice, run_metrics  # noqa: F401
 from data_governance_spark.metrics.tmgl_specs import (
     TMGL_SPECS,
     decs_label_dim,
-    map_metric,
     timeline_metric,
 )
 from data_governance_spark.sources.solr_xml import project_fields, read_solr_xml
@@ -61,59 +67,41 @@ def compute_metrics(
 
     ``decs`` enables the J12 subject decode (numeric ids -> English
     descriptors); ``areas`` the J11 dimension/therapy label decode —
-    both applied post-aggregation exactly as the reference does."""
-    global_rows = run_metrics(landing, TMGL_SPECS).withColumn(
-        "country", F.lit(None).cast("string")
+    both applied post-aggregation exactly as the reference does, as
+    one broadcast join on (type, code)."""
+    sliced = attach_slices(
+        landing, "cp", who_region_dim,
+        {"region": "who_region", "country": "pais_en"}, dim_country_col="pais_en",
     )
-
-    by_region = attach_slice(
-        landing, "cp", who_region_dim, dim_country_col="pais_en",
-        dim_slice_col="who_region", slice_col="region",
-    )
-    region_rows = run_metrics(by_region, TMGL_SPECS, slice_col="region").withColumn(
-        "country", F.lit(None).cast("string")
-    )
-
-    by_country = attach_slice(
-        landing, "cp", who_region_dim, dim_country_col="pais_en",
-        dim_slice_col="pais_en", slice_col="country",
-    )
-    country_rows = (
-        run_metrics(by_country, TMGL_SPECS, slice_col="country")
-        .withColumnRenamed("country", "_c")
-        .withColumn("region", F.lit(None).cast("string"))
-        .withColumnRenamed("_c", "country")
-    )
-
-    cols = ["type", "region", "country", "name", "year", "count"]
-    out = (
-        global_rows.select(*cols)
-        .unionByName(region_rows.select(*cols))
-        .unionByName(country_rows.select(*cols))
-    )
+    out = run_metrics_single_scan(sliced, TMGL_SPECS, slice_cols=("region", "country"))
 
     # post-aggregation label decodes (J11/J12), scoped per metric type
-    def decode(df: DataFrame, metric_type: str, labels: DataFrame) -> DataFrame:
-        target = df.filter(F.col("type") == metric_type)
-        rest = df.filter(F.col("type") != metric_type)
-        return rest.unionByName(label_join(target, labels).select(*cols))
-
+    labels = []
     if decs is not None:
-        out = decode(out, "subject", decs_label_dim(decs))
+        labels.append(
+            decs_label_dim(decs).select(
+                F.lit("subject").alias("label_type"), "code_xml", "label_en"
+            )
+        )
     if areas is not None:
-        for t in ("dimension", "therapy"):
-            out = decode(out, t, areas)
+        labels.append(
+            areas.select(
+                F.explode(F.array(F.lit("dimension"), F.lit("therapy"))).alias("label_type"),
+                "code_xml",
+                "label_en",
+            )
+        )
+    if labels:
+        out = label_join(out, reduce(DataFrame.unionByName, labels), type_col="label_type")
     return out
 
 
 def compute_timeline(landing: DataFrame, who_region_dim: DataFrame) -> DataFrame:
     """A11 global + A12 per-country (type='indicators'/'map' rows in
-    the reference's store)."""
-    glob = timeline_metric(landing).withColumn("country", F.lit(None).cast("string"))
-    by_country = attach_slice(
-        landing, "cp", who_region_dim, dim_country_col="pais_en",
-        dim_slice_col="pais_en", slice_col="country",
+    the reference's store), from one aggregate."""
+    sliced = attach_slices(
+        landing, "cp", who_region_dim, {"country": "pais_en"}, dim_country_col="pais_en"
     )
-    per_country = map_metric(by_country, slice_col="country")
-    cols = ["country", "year", "total", "with_fulltext"]
-    return glob.select(*cols).unionByName(per_country.select(*cols))
+    return timeline_metric(sliced, slice_cols=("country",)).select(
+        "country", "year", "total", "with_fulltext"
+    )

@@ -169,10 +169,26 @@ def test_single_scan_equals_per_family_runner(spark, facts):
     assert sa == sb and len(sa) > 0
 
 
-def test_single_scan_rejects_prefilter_specs(spark, facts):
+def test_single_scan_prefilter_matches_run_metric(spark, facts):
+    # A2's article-only prefilter folds into the shared projection: the
+    # journal family must equal run_metric's .filter(prefilter) result,
+    # alone and next to families without a prefilter
     df, _ = facts
-    with pytest.raises(ValueError):
-        run_metrics_single_scan(df, TMGL_SPECS)
+    journal = TMGL_SPECS[1]
+    assert journal.prefilter is not None
+    one = run_metrics_single_scan(df, [journal])
+    assert sorted(map(str, one.collect())) == sorted(
+        map(str, run_metric(df, journal).collect())
+    )
+    # a family with a later min_year folds into the same projection too
+    late = MetricSpec(name="late", entity_col="la", min_year=2020)
+    specs = TMGL_SPECS + [late]
+    every = run_metrics_single_scan(df, specs)
+    assert sorted(map(str, every.collect())) == sorted(
+        map(str, run_metrics(df, specs).collect())
+    )
+    assert every.filter(F.col("type") == "journal").count() > 0
+    assert every.filter(F.col("type") == "late").count() > 0
 
 
 def test_attach_slice_no_double_count(spark, facts):
@@ -192,6 +208,34 @@ def test_attach_slice_no_double_count(spark, facts):
     assert dup == 0
     # every original row survives (rows with no matched region get NULL)
     assert fanned.select("id").distinct().count() == df.count()
+
+
+def test_attach_slices_join_fallback_matches_inline(spark, facts, monkeypatch):
+    """A dim too big to inline goes through the explode/join/collect_set
+    fallback; both paths must give every row the same slice sets, and
+    the single-scan runner the same metrics over either."""
+    import data_governance_spark.metrics.runner as runner
+
+    df, _ = facts
+    dim = who_region_dim(spark)
+    slicings = {"region": "who_region", "country": "pais_en"}
+
+    def slices(frame):
+        return sorted(
+            (r["id"], tuple(sorted(r["region"])), tuple(sorted(r["country"])))
+            for r in frame.select("id", "region", "country").collect()
+        )
+
+    def metrics(frame):
+        out = run_metrics_single_scan(frame, TMGL_SPECS, slice_cols=("region", "country"))
+        return sorted(map(str, out.collect()))
+
+    inline = runner.attach_slices(df, "cp", dim, slicings, dim_country_col="pais_en")
+    monkeypatch.setattr(runner, "_INLINE_DIM_MAX", 1)
+    joined = runner.attach_slices(df, "cp", dim, slicings, dim_country_col="pais_en")
+    assert joined.columns == inline.columns
+    assert slices(joined) == slices(inline)
+    assert metrics(joined) == metrics(inline)
 
 
 def test_sliced_global_not_fanned(spark, facts):

@@ -95,6 +95,53 @@ def test_q21_single_scan_for_all_families(spark):
     assert len(scans) == 1
 
 
+def _formatted(df) -> str:
+    mode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted"
+    )
+    return df._jdf.queryExecution().explainString(mode)
+
+
+def _parquet_scans(plan: str) -> int:
+    return sum(1 for l in plan.splitlines() if l.startswith("(") and "Scan parquet" in l)
+
+
+@pytest.fixture(scope="module")
+def tmgl_parquet_landing(spark, tmp_path_factory):
+    from data_governance_spark.fixtures import tmgl_landing
+
+    path = str(tmp_path_factory.mktemp("tmgl_plans") / "landing")
+    tmgl_landing(spark).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_tmgl_metrics_one_scan_one_aggregate(spark, tmgl_parquet_landing):
+    # every family x every slice (global, regions, countries) from ONE
+    # landing scan and ONE final count aggregate, decodes included (the
+    # per-family composition scans 30 times)
+    from data_governance_spark.fixtures import tmgl_areas_dim, who_region_dim
+    from data_governance_spark.tmgl_pipeline import compute_metrics
+
+    decs = spark.createDataFrame(
+        [("012345", "Acupuncture")], "mfn string, descritor_ingles string"
+    )
+    df = compute_metrics(
+        tmgl_parquet_landing, who_region_dim(spark), decs=decs, areas=tmgl_areas_dim(spark)
+    )
+    plan = _formatted(df)
+    assert _parquet_scans(plan) == 1
+    assert plan.count("Functions [1]: [count(1)]") == 1
+    assert plan.count("Functions [1]: [partial_count(1)]") == 1
+
+
+def test_tmgl_timeline_one_scan(spark, tmgl_parquet_landing):
+    from data_governance_spark.fixtures import who_region_dim
+    from data_governance_spark.tmgl_pipeline import compute_timeline
+
+    plan = _formatted(compute_timeline(tmgl_parquet_landing, who_region_dim(spark)))
+    assert _parquet_scans(plan) == 1
+
+
 def test_d01_partial_aggregation(spark):
     plan = plan_of(spark, "d01_token_quality")
     assert "partial_count" in plan  # map-side combine on the exploded rows

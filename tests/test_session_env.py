@@ -13,14 +13,39 @@ single-threaded in a live session.
 
 from __future__ import annotations
 
+import json
 import os
+import subprocess
+import sys
 
-import data_governance_spark.session  # noqa: F401  (import applies the pin)
+from data_governance_spark.session import df_debug_conf
+
+BLAS_VARS = ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_blas_env_pinned_on_import():
-    for var in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS"):
-        assert os.environ.get(var) == "1", var
+    # in a fresh interpreter whose env has no BLAS vars: a host that
+    # pre-exports one (the pin is a setdefault) must not decide this
+    env = {k: v for k, v in os.environ.items() if k not in BLAS_VARS}
+    probe = (
+        "import json, os, data_governance_spark.session; "
+        f"print(json.dumps({{v: os.environ.get(v) for v in {BLAS_VARS!r}}}))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe], env=env, cwd=REPO,
+        capture_output=True, text=True, check=True, timeout=120,
+    )
+    seen = json.loads(out.stdout.strip().splitlines()[-1])
+    for var in BLAS_VARS:
+        assert seen[var] == "1", var
+
+
+def test_df_debug_env_mapping():
+    for on in ("1", "true", "TRUE", "True", "yes", "YES", " yes "):
+        assert df_debug_conf(on) == "true", on
+    for off in (None, "", "0", "false", "no", "off", "2", "enabled"):
+        assert df_debug_conf(off) == "false", off
 
 
 def test_workers_inherit_single_threaded_blas(spark):

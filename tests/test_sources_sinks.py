@@ -115,6 +115,56 @@ def test_chart_json_pivot(spark):
     assert sliced == [{"ano": 2020, "en": 99}]
 
 
+def test_chart_json_equals_collected_spark_pivot(spark):
+    # chart_json pivots in Python; it must give pivot_metric's rows
+    # with nulls dropped, keys in the same order ("ano", then sorted
+    # names), for every slice — the global one included
+    from data_governance_spark.fixtures import tmgl_landing, who_region_dim
+    from data_governance_spark.metrics.runner import run_metric_sliced
+    from data_governance_spark.metrics.tmgl_specs import TMGL_SPECS
+    from data_governance_spark.sinks.json_sink import pivot_metric
+
+    metrics = None
+    for spec in TMGL_SPECS[:3]:
+        part = run_metric_sliced(
+            tmgl_landing(spark), spec, "cp", who_region_dim(spark),
+            dim_country_col="pais_en",
+        )
+        metrics = part if metrics is None else metrics.unionByName(part)
+    metrics = metrics.cache()
+    checked = 0
+    for t in ("language", "journal", "doctype"):
+        for region in (None, "amro", "searo", "nowhere"):
+            want = [
+                {k: v for k, v in r.asDict().items() if v is not None}
+                for r in pivot_metric(metrics, t, slice_value=region).collect()
+            ]
+            got = chart_json(metrics, t, slice_value=region)
+            assert got == want
+            assert [list(r) for r in got] == [list(r) for r in want]
+            checked += len(got)
+    assert checked > 0
+    metrics.unpersist()
+
+
+def test_harvest_fetches_each_page_once(spark):
+    # two joined branches of one harvest must not replay the fetch: the
+    # harvest is one snapshot, one request per page
+    fetched = spark.sparkContext.accumulator(0)
+
+    def counting_fetch(offset, limit, params):
+        fetched.add(1)
+        return [{"id": offset + i} for i in range(3)]
+
+    pages = harvest_pages(spark, counting_fetch, total_count=500, limit=100, num_partitions=2)
+    sizes = pages.select("offset", F.size("records").alias("n"))
+    errors = pages.filter(F.col("error").isNull()).select("offset")
+    assert sorted(r["offset"] for r in sizes.join(errors, "offset").collect()) == [
+        0, 100, 200, 300, 400
+    ]
+    assert fetched.value == 5
+
+
 def test_rest_harvest_and_upsert(spark):
     # defined inline so cloudpickle ships it by value to executors
     def fake_fetch(offset, limit, params):

@@ -181,3 +181,122 @@ def test_property_pivot_round_trip(spark):
         if name != "ano"
     )
     assert back == [("en", 2020, 5), ("pt", 2021, 3)]
+
+
+# --------------------------------------------------------------------------
+# compute_metrics / compute_timeline against the per-family composition:
+# run_metric over attach_slice fan-outs (one aggregate per family and
+# slicing) and one label_join per decoded type.
+
+COLS = ["type", "region", "country", "name", "year", "count"]
+
+
+def _reference_metrics(landing, dim, decs=None, areas=None):
+    from data_governance_spark.metrics.runner import attach_slice, label_join, run_metric
+    from data_governance_spark.metrics.tmgl_specs import TMGL_SPECS, decs_label_dim
+
+    none = F.lit(None).cast("string")
+    parts = [
+        run_metric(landing, s).withColumn("country", none).select(*COLS)
+        for s in TMGL_SPECS
+    ]
+    for slice_col, dim_col in (("region", "who_region"), ("country", "pais_en")):
+        fanned = attach_slice(
+            landing, "cp", dim, dim_country_col="pais_en",
+            dim_slice_col=dim_col, slice_col=slice_col,
+        )
+        other = "country" if slice_col == "region" else "region"
+        parts += [
+            run_metric(fanned, s, slice_col=slice_col).withColumn(other, none).select(*COLS)
+            for s in TMGL_SPECS
+        ]
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    decodes = []
+    if decs is not None:
+        decodes.append(("subject", decs_label_dim(decs)))
+    if areas is not None:
+        decodes += [("dimension", areas), ("therapy", areas)]
+    for t, labels in decodes:
+        out = out.filter(F.col("type") != t).unionByName(
+            label_join(out.filter(F.col("type") == t), labels).select(*COLS)
+        )
+    return out
+
+
+def _reference_timeline(landing, dim):
+    from data_governance_spark.metrics.runner import attach_slice
+    from data_governance_spark.metrics.tmgl_specs import map_metric, timeline_metric
+
+    cols = ["country", "year", "total", "with_fulltext"]
+    fanned = attach_slice(
+        landing, "cp", dim, dim_country_col="pais_en",
+        dim_slice_col="pais_en", slice_col="country",
+    )
+    glob = timeline_metric(landing).withColumn("country", F.lit(None).cast("string"))
+    return glob.select(*cols).unionByName(map_metric(fanned).select(*cols))
+
+
+def _same_rows(a, b):
+    assert a.schema == b.schema
+    rows = lambda df: sorted(map(tuple, df.collect()), key=repr)  # noqa: E731
+    ra, rb = rows(a), rows(b)
+    assert ra == rb and ra
+
+
+@pytest.fixture(scope="module")
+def seeded(spark):
+    """A seeded landing and a WHO dim with the slicing edge cases: docs
+    in two regions and with several countries (one in two regions, two
+    of one region), NULL and empty cp, a padded/upper-cased spelling,
+    an unknown country, non-article journals, regex misses ('nomatch',
+    'no_digits') and years below 1500 ('1499', 's.d.')."""
+    from data_governance_spark.fixtures import (
+        TMGL_LANDING_SCHEMA,
+        tmgl_landing_rows,
+    )
+
+    rows = []
+    for i, r in enumerate(tmgl_landing_rows(n=300, seed=11)):
+        r = list(r)
+        if i % 7 == 0:
+            r[14] = None
+        elif i % 5 == 0:
+            r[14] = r[14] + [" BRAZIL ", "Mexico"]
+        rows.append(tuple(r))
+    landing = spark.createDataFrame(rows, TMGL_LANDING_SCHEMA)
+    dim = who_region_dim(spark).unionByName(
+        spark.createDataFrame(
+            [("emro", "France", "France", ["FR"]), ("amro", "Mexico", "Mexico", ["MX"])],
+            who_region_dim(spark).schema,
+        )
+    )
+    return landing, dim
+
+
+def test_compute_metrics_equals_per_family_composition(spark, landing, seeded):
+    from data_governance_spark.fixtures import tmgl_areas_dim
+
+    decs = spark.createDataFrame(
+        [("012345", "Acupuncture"), ("000042", "Herbal Medicine")],
+        "mfn string, descritor_ingles string",
+    )
+    for facts, dim in ((landing, who_region_dim(spark)), seeded):
+        _same_rows(compute_metrics(facts, dim), _reference_metrics(facts, dim))
+        areas = tmgl_areas_dim(spark)
+        _same_rows(
+            compute_metrics(facts, dim, decs=decs, areas=areas),
+            _reference_metrics(facts, dim, decs=decs, areas=areas),
+        )
+    m = compute_metrics(*seeded)
+    # the edge cases are really there: a two-region country, a second
+    # country of one region and the article-only journal family
+    assert m.filter(F.col("region") == "emro").count() > 0
+    assert m.filter(F.col("country") == "Mexico").count() > 0
+    assert m.filter(F.col("type") == "journal").count() > 0
+
+
+def test_compute_timeline_equals_per_family_composition(spark, landing, seeded):
+    for facts, dim in ((landing, who_region_dim(spark)), seeded):
+        _same_rows(compute_timeline(facts, dim), _reference_timeline(facts, dim))
